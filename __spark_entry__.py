@@ -27,7 +27,7 @@ from explora_kafka_spark.functions import zorder as ZO
 from explora_kafka_spark.operators import cooccurrence as COOC
 from explora_kafka_spark.operators import mobility as MOB
 from explora_kafka_spark.functions.timeutil import (
-    composite_key_col, truncate_ts_col, ts_ms_col)
+    composite_key_col, ts_ms_col)
 from explora_kafka_spark.operators import clustering as CL
 from explora_kafka_spark.operators import contamination as CONT
 from explora_kafka_spark.operators import corpus as CORP

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
@@ -46,6 +47,32 @@ BROADCAST_COVER_THRESHOLD = 1024
 #: broadcast semi-join.
 COMPRESSED_COVER_LIMIT = 4096
 
+#: joins a string literal set into the one string `isin_strings` ships to
+#: the JVM; it is split there as a regex, so it must not be a metacharacter
+_ISIN_SEP = ","
+
+
+def isin_strings(col: Column, values: Sequence[str]) -> Column:
+    """`col.isin(values)` built in one JVM call instead of one per value.
+
+    PySpark converts every isin literal with its own py4j round trip, so
+    those round trips were most of a few-hundred-cell cover's planning
+    time. Here the values travel as one joined string, are split
+    JVM-side, wrapped as a Scala Seq and handed to the same
+    `Column.isin`: the plan keeps the same In/INSET expression and
+    pushdown. The values are never spliced into SQL text. An empty list,
+    a non-string value or a value holding the separator takes
+    `Column.isin` itself (splitting "" would give [""], not [])."""
+    values = list(values)
+    if not values or any(not isinstance(v, str) or _ISIN_SEP in v
+                         for v in values):
+        return col.isin(values)
+    jvm = SparkContext._active_spark_context._jvm
+    parts = jvm.java.util.regex.Pattern.compile(_ISIN_SEP).split(
+        _ISIN_SEP.join(values), -1)
+    seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(parts)
+    return Column(col._jc.isin(seq))
+
 
 def _prefix_set_predicate(cell_col: str, prefixes: Sequence[str], full_len: int):
     """Membership predicate for a mixed-length prefix set (compress_cover
@@ -58,7 +85,7 @@ def _prefix_set_predicate(cell_col: str, prefixes: Sequence[str], full_len: int)
     cond = None
     for plen, ps in sorted(by_len.items()):
         col = F.col(cell_col) if plen >= full_len else F.substring(cell_col, 1, plen)
-        c = col.isin(ps)
+        c = isin_strings(col, ps)
         cond = c if cond is None else (cond | c)
     return cond if cond is not None else F.lit(False)
 
@@ -94,7 +121,7 @@ def _filter_cells(
     if cells is not None:
         cells = list(cells)
         if len(cells) <= BROADCAST_COVER_THRESHOLD:
-            return df.filter(F.col(cell_col).isin(cells))
+            return df.filter(isin_strings(F.col(cell_col), cells))
         if alphabet:
             comp = geo.compress_cover(cells, alphabet)
             if len(comp) <= COMPRESSED_COVER_LIMIT:
@@ -310,7 +337,7 @@ def _prefix_cover_filter(view: DataFrame, cover: list[str], plen: int,
         return _filter_cells(view, cover, None, alphabet=alphabet)
     pref = F.substring("gh", 1, plen)
     if len(cover) <= BROADCAST_COVER_THRESHOLD:
-        return view.filter(pref.isin(cover))
+        return view.filter(isin_strings(pref, cover))
     if alphabet:
         comp = geo.compress_cover(cover, alphabet)
         if len(comp) <= COMPRESSED_COVER_LIMIT:

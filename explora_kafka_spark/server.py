@@ -7,7 +7,9 @@ Routes (wire-identical paths and bodies):
     GET /api/airquality/{metricId}/aggregate/{aggregate}/snapshot
 
 Responses: 200 → Message envelope {columns, data, metadata};
-400 → ErrorMessage {errorMessage, errorCode}. The scatter-gather
+400 → ErrorMessage {errorMessage, errorCode}; 500 → a fixed
+"internal error" ErrorMessage, with the exception logged server-side
+(its text may carry paths and plan details). The scatter-gather
 `local=true` flag (QueryingController.java:123-210) has no equivalent —
 Spark executes the distributed merge itself (SURVEY §2.6 D2).
 
@@ -19,6 +21,7 @@ WSGI/ASGI framework unchanged.
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -27,6 +30,8 @@ from urllib.parse import parse_qsl, urlparse
 from pyspark.sql import DataFrame
 
 from . import api
+
+_LOG = logging.getLogger(__name__)
 
 _ROUTE = re.compile(
     r"^/api/airquality/(?P<metric>[^/]+)/aggregate/(?P<agg>[^/]+)"
@@ -93,8 +98,10 @@ def _make_handler(ctx: EngineContext):
                 self._send(200, body)
             except api.ApiError as exc:
                 self._send(exc.code, exc.body)
-            except Exception as exc:  # noqa: BLE001 — 500 with message
-                self._send(500, {"errorMessage": str(exc), "errorCode": 500})
+            except Exception:  # noqa: BLE001 — logged here, not echoed
+                _LOG.exception("unhandled error serving %s", url.path)
+                self._send(500, {"errorMessage": "internal error",
+                                 "errorCode": 500})
 
     return Handler
 

@@ -185,6 +185,17 @@ _LATTICE_COLS = ("metric_id", "precision", "res", "gh", "ts",
                  "count", "sum", "avg", "min", "max")
 
 
+def _pin_partition_types(df: DataFrame) -> DataFrame:
+    """Pin the partition columns of a store read back to their declared
+    types: partition values come back through Spark's type inference,
+    which would turn a numeric-looking string metric_id ('123') into an
+    int and silently change the store schema between writes."""
+    pins = {"metric_id": "string", "precision": "int", "res": "string",
+            "ts_m": "int"}
+    return df.withColumns({c: F.col(c).cast(t) for c, t in pins.items()
+                           if c in df.columns})
+
+
 def _with_ts_month(lattice: DataFrame) -> DataFrame:
     """Derive the coarse partition bucket (yyyyMM as int — int-typed so
     partition-value inference on read-back is deterministic)."""
@@ -259,6 +270,7 @@ class ParquetViewStore:
         only the current version (the original behavior)."""
         self.path = path
         self.keep_versions = max(1, keep_versions)
+        self._memo: tuple | None = None
         os.makedirs(path, exist_ok=True)
 
     def _current_file(self) -> str:
@@ -289,26 +301,35 @@ class ParquetViewStore:
         bid = int(parts[1]) if len(parts) > 1 and parts[1] else None
         return parts[0], bid
 
-    def _read_raw(self, spark: SparkSession) -> DataFrame | None:
-        """Current version including the ts_m partition column.
+    def _frames(self, spark: SparkSession,
+                version: str) -> tuple[DataFrame, DataFrame]:
+        """(raw, served) frames of one committed version: raw keeps the
+        ts_m partition column, served drops it.
 
-        Partition-column values come back through Spark's type inference,
-        which would turn a numeric-looking string metric_id ('123') into
-        an int and silently change the store schema between writes — pin
-        the partition columns back to their declared types."""
+        Memoized per (session, version): listing the version directory
+        and inferring its schema costs a Spark job per read, and a
+        version directory is written in full before the pointer swap and
+        its uuid name is never reused, so a cached handle cannot go
+        stale. HTTP handler threads read concurrently; the memo is one
+        tuple, replaced whole, so a reader sees an old entry or a new one
+        and at worst two threads both build the same frames."""
+        memo = self._memo
+        if memo is not None and memo[0] is spark and memo[1] == version:
+            return memo[2]
+        raw = _pin_partition_types(
+            spark.read.parquet(os.path.join(self.path, version)))
+        frames = (raw, raw.drop("ts_m"))
+        self._memo = (spark, version, frames)
+        return frames
+
+    def _read_raw(self, spark: SparkSession) -> DataFrame | None:
+        """Current version including the ts_m partition column."""
         v = self.current_version()
-        if v is None:
-            return None
-        df = spark.read.parquet(os.path.join(self.path, v))
-        for col, typ in (("metric_id", "string"), ("precision", "int"),
-                         ("res", "string"), ("ts_m", "int")):
-            if col in df.columns:
-                df = df.withColumn(col, F.col(col).cast(typ))
-        return df
+        return self._frames(spark, v)[0] if v is not None else None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        df = self._read_raw(spark)
-        return df.drop("ts_m") if df is not None else None
+        v = self.current_version()
+        return self._frames(spark, v)[1] if v is not None else None
 
     def _history_file(self) -> str:
         return os.path.join(self.path, "_HISTORY")
@@ -331,12 +352,7 @@ class ParquetViewStore:
         `VERSION AS OF` semantic. Raises if the version was GC'd."""
         if not os.path.isdir(os.path.join(self.path, version)):
             raise ValueError(f"version not retained: {version}")
-        df = spark.read.parquet(os.path.join(self.path, version))
-        for col, typ in (("metric_id", "string"), ("precision", "int"),
-                         ("res", "string"), ("ts_m", "int")):
-            if col in df.columns:
-                df = df.withColumn(col, F.col(col).cast(typ))
-        return df.drop("ts_m") if "ts_m" in df.columns else df
+        return self._frames(spark, version)[1]
 
     def diff_versions(self, spark: SparkSession, v_old: str,
                       v_new: str) -> DataFrame:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import logging
 import urllib.error
 import urllib.request
 
@@ -82,3 +83,22 @@ def test_snapshot_route_400(srv):
 def test_unknown_route_404(srv):
     code, body = _get(f"{srv}/api/nope")
     assert code == 404
+
+
+def test_internal_error_body_carries_no_exception_text(monkeypatch, caplog,
+                                                       srv):
+    secret = "/var/lib/store/v_0123 Py4JJavaError stack"
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError(secret)
+
+    monkeypatch.setattr(server.api, "handle_snapshot", boom)
+    with caplog.at_level(logging.ERROR, logger=server.__name__):
+        code, body = _get(
+            f"{srv}/api/airquality/view/aggregate/count/snapshot"
+            "?ts=1704844800000&bbox=40.0,-90.0,-40.0,90.0&res=day"
+            "&gh_precision=6"
+        )
+    assert code == 500
+    assert body == {"errorMessage": "internal error", "errorCode": 500}
+    assert secret in caplog.text  # the cause stays on the server side

@@ -5,6 +5,8 @@ reads, key-level version diffs, and the unchanged default policy."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,3 +78,68 @@ def test_diff_versions_reports_added_and_changed_keys(spark, tmp_path):
     for r in by_status["changed"]:
         assert r["metric_id"] == "view"
         assert r["new_count"] == 2 * r["old_count"]
+
+
+def test_read_reuses_one_frame_per_committed_version(spark, tmp_path):
+    """A committed version is listed and schema-inferred once: repeated
+    reads (one per served request) share its frame, a merge's new
+    version is read fresh, and the partition-type pin survives the memo."""
+    readings = load_readings(spark, SF_DIR).withColumn(
+        "metric_id", F.lit("123"))
+    kw = dict(precisions=(6,), resolutions=("day",))
+    store = P.ParquetViewStore(str(tmp_path / "store"), keep_versions=2)
+    store.merge_readings(spark, readings.filter(F.col("event_id") % 2 == 0),
+                         batch_id=0, **kw)
+    v0 = store.current_version()
+    first = store.read(spark)
+    assert store.read(spark) is first
+    assert store.read_version(spark, v0) is first
+    assert dict(first.dtypes)["metric_id"] == "string"
+    assert {r.metric_id for r in first.select("metric_id").collect()} == {"123"}
+    before = first.agg(F.sum("count")).first()[0]
+
+    store.merge_readings(spark, readings.filter(F.col("event_id") % 2 == 1),
+                         batch_id=1, **kw)
+    after = store.read(spark)
+    assert after is not first
+    assert store.read(spark) is after
+    total = readings.count()
+    assert after.agg(F.sum("count")).first()[0] == total > before
+    assert dict(after.dtypes)["metric_id"] == "string"
+
+
+def test_concurrent_reads_get_their_own_version(spark, tmp_path):
+    """Handler threads share the version memo: with readers alternating
+    between two retained versions, every frame handed out must scan the
+    version it was asked for (a torn memo entry would pair one version's
+    name with the other's frame)."""
+    store = P.ParquetViewStore(str(tmp_path / "store"), keep_versions=2)
+    d = _delta(spark, "view")
+    store.merge(spark, d, batch_id=0)
+    store.merge(spark, d, batch_id=1)
+    versions = store.list_versions()
+    wrong, errors = [], []
+
+    def reader(k):
+        try:
+            for i in range(6):
+                v = versions[(i + k) % 2]
+                files = store.read_version(spark, v).inputFiles()
+                if not files or any(f"/{v}/" not in f for f in files):
+                    wrong.append(v)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,))
+                   for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and wrong == []
